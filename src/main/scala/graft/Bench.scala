@@ -124,7 +124,11 @@ object Bench {
     }
     val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
     val p1 = ordered.map { case (name, fn) => name -> time(fn) }
-    val p1Total = p1.map(_._2).sum
+    // a failed query's negative sentinel counts as ZERO seconds in a
+    // total — it must never lower it; failures are reported by name
+    def total(rs: Seq[(String, Double)]): Double =
+      rs.iterator.map(r => math.max(r._2, 0.0)).sum
+    val p1Total = total(p1)
     val retryThreshold = 2.0
     // A query is worth re-timing when it is slow in absolute terms OR
     // sits at flag level (≥3× floor and ≥0.5 s over) — the r17 flag
@@ -256,8 +260,7 @@ object Bench {
         val rq = regressed.map { case (k, v, f) =>
           "\"" + k + "\":{\"sec\":" + r3(v) + ",\"floor\":" + r3(f) + "}"
         }.mkString("{", ",", "}")
-        val total = results.map(_._2).sum
-        println(s"""{"metric":"floor_delta","floor_total":${r3(floorTotal)},"total":${r3(total)},"n_regressed":${regressed.size},"regressions":$rq}""")
+        println(s"""{"metric":"floor_delta","floor_total":${r3(floorTotal)},"total":${r3(total(results))},"n_regressed":${regressed.size},"regressions":$rq}""")
       }
     }
     // ...then a SHORT final line: the driver's tail-capture truncated
@@ -271,8 +274,8 @@ object Bench {
     val hq = results.filter(r => headline(r._1))
       .map { case (k, v) => "\"" + k + "\":" + r3(v) }
       .mkString("{", ",", "}")
-    val total = results.map(_._2).sum
-    println(s"""{"metric":"total","value":${r3(total)},"unit":"sec","first_pass_total":${r3(p1Total)},"queries":$hq,"sf":"$sfDir"}""")
+    val failed = results.filter(_._2 <= 0).map("\"" + _._1 + "\"")
+    println(s"""{"metric":"total","value":${r3(total(results))},"unit":"sec","first_pass_total":${r3(p1Total)},"n_failed":${failed.size},"failed":${failed.mkString("[", ",", "]")},"queries":$hq,"sf":"$sfDir"}""")
     spark.stop()
   }
 }

@@ -2412,8 +2412,8 @@ object Cells {
   // generalized to named key parts — INSERT/UPDATE pack literals into
   // typed binary rows, tombstone markers carry empty blobs at the
   // table's value type, DELETE (full-key AND prefix) routes the CQL
-  // typed marker path (the C38 Spark-SQL intercept would stamp
-  // long-valued files), field selection unpacks per row.
+  // typed marker path (markers append under the table's own value
+  // type), field selection unpacks per row.
   private def typedUdtLifecycle(s: SparkSession, d: String): DataFrame = {
     val cat = "gq_udtt"
     if (s.conf.getOption(s"spark.sql.catalog.$cat").isEmpty) {

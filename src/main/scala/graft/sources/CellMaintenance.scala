@@ -971,17 +971,6 @@ object CellMaintenance {
     }.sortBy(_._1)
   }
 
-  /** The incremental-view variant: compact only when the table has
-    * more than `maxFiles` flush files (minor-compaction trigger).
-    * `policy = "stcs"` (round 7) runs [[compactTiered]] passes
-    * instead of a major compaction — cold generations are never
-    * rewritten; the trigger fires the same way, but each pass merges
-    * only the most-populous similar-size tier and repeats while a
-    * tier is eligible and the file count stays above the threshold.
-    * Falls back to ONE major compaction if no tier is eligible but
-    * the count still exceeds `maxFiles` (pathological all-different-
-    * size layout).
-    */
   /** Compaction steered by the table's DECLARED strategy — the CQL
     * `WITH compaction = {'class': ...}` property (`compaction` in
     * `_props`): stcs/lcs route through [[compactIfNeeded]]'s
@@ -1004,48 +993,38 @@ object CellMaintenance {
       case _ => compactIfNeeded(spark, dir, maxFiles)
     }
 
+  /** The incremental-view variant: compact only when the table has
+    * more than `maxFiles` flush files (minor-compaction trigger).
+    * `policy = "stcs"` (round 7) runs [[compactTiered]] passes
+    * instead of a major compaction — cold generations are never
+    * rewritten; the trigger fires the same way, but each pass merges
+    * only the most-populous similar-size tier and repeats while the
+    * file count stays above the threshold and each pass lowers it.
+    * Falls back to ONE major compaction if the passes stop short of
+    * `maxFiles` (no eligible tier — a pathological all-different-size
+    * layout — or a merge that rolled into as many files as it read).
+    */
   def compactIfNeeded(spark: SparkSession, dir: String,
       maxFiles: Int, policy: String = "major"): Option[(Int, Int)] =
     if (CellPlanning.listFiles(dir).size <= maxFiles) None
     else if (policy == "stcs" || policy == "lcs") {
       val before = CellPlanning.listFiles(dir).size
+      // a pass counts as progress only when the file count DROPS: a
+      // merge whose output rolls into as many files as it read (one
+      // per reconcile task) returns Some and would repeat forever
+      var n = before
       var progressed = true
-      while (progressed &&
-          CellPlanning.listFiles(dir).size > maxFiles)
-        progressed =
-          if (policy == "stcs") compactTiered(spark, dir).isDefined
-          else compactLeveled(spark, dir).isDefined
-      val after = CellPlanning.listFiles(dir).size
-      if (after > maxFiles) Some(compact(spark, dir))
-      else Some((before, after))
+      while (progressed && n > maxFiles) {
+        if (policy == "stcs") compactTiered(spark, dir)
+        else compactLeveled(spark, dir)
+        val m = CellPlanning.listFiles(dir).size
+        progressed = m < n
+        n = m
+      }
+      if (n > maxFiles) Some(compact(spark, dir))
+      else Some((before, n))
     } else Some(compact(spark, dir))
 
-  /** SIZE-TIERED compaction (Cassandra's STCS default, round 7): a
-    * 100 TB table must not rewrite its cold multi-GB generations every
-    * time four fresh flushes land, which is exactly what a count-
-    * triggered major compaction does. Files are bucketed into
-    * similar-size TIERS (greedy over the size-sorted list: a file
-    * joins the current bucket while its size is ≤ `bucketHigh` × the
-    * bucket's average, Cassandra's own rule), and only the tier with
-    * the most files — the hot, freshly-flushed one — is compacted,
-    * once it holds ≥ `minThreshold` files. Each pass merges ~equal-
-    * size inputs into one file a tier up; total write amplification
-    * stays O(log(table/flush)) per cell instead of O(flushes).
-    *
-    * A tier compaction reads ONLY its own files (hard-linked into a
-    * scratch dir so pruning/merge machinery runs unchanged) and
-    * publishes the merged result as a new flush BEFORE deleting the
-    * inputs — a reconciling reader that races the swap sees both
-    * generations, which LWW merges to identical winners. Markers are
-    * always kept and NEVER gc-purged here (`gcGraceMs` retention
-    * needs table-wide scope: an older shadowed version may live in a
-    * tier this pass can't see — the same reason Cassandra only purges
-    * tombstones when the sstable set covers the partition). Full
-    * [[compact]] remains the purge path.
-    *
-    * Returns (compacted file names, files before, files after), or
-    * None when no tier is eligible.
-    */
   // ---- C54: LEVELED compaction (Cassandra's LCS) ----
 
   /** The table's level registry (`_levels`, java-properties file:
@@ -1107,7 +1086,6 @@ object CellMaintenance {
       rollRecords: Int = CellSource.DefaultRollRecords)
       : Option[(Int, Seq[String], Seq[String])] = {
     import java.nio.file.{Files => JFiles, Paths => JPaths}
-    val norm = CellPlanning.normalize(dir)
     val files = CellPlanning.listFiles(dir)
     val lv = levels(dir)
     def nameOf(f: String) = JPaths.get(f).getFileName.toString
@@ -1126,39 +1104,12 @@ object CellMaintenance {
 
     def mergeInto(target: Int, inputs: Seq[String])
         : Option[(Int, Seq[String], Seq[String])] = {
-      val counter = tableProp(dir, "counter").exists(_.toBoolean)
-      val spec = CellPlanning.keySpecOf(norm, files)
-      val scratch = JFiles.createTempDirectory(JPaths.get(norm), ".lvl-")
-      try {
-        inputs.foreach { f =>
-          val p = JPaths.get(f)
-          JFiles.createLink(scratch.resolve(p.getFileName), p)
-        }
-        spark.read.format("graft.sources.CellSource")
-          .option("reconcile", "true")
-          .option("keepMarkers", "true")
-          .option("withTtl", spec.isDefault.toString)
-          .option("counter", counter.toString)
-          .load(scratch.toString)
-          .write.format("graft.sources.CellSource")
-          .option("withTtl", spec.isDefault.toString)
-          .option("rollRecords", rollRecords.toString)
-          .mode("append").save(dir) // publish BEFORE deleting inputs
-        val outputs = CellPlanning.listFiles(dir)
-          .filterNot(files.contains)
-        inputs.foreach(f => JFiles.delete(JPaths.get(f)))
-        CellManifest.refresh(dir)
-        writeLevels(dir,
-          (lv -- inputs.map(nameOf)) ++
-            outputs.map(f => nameOf(f) -> target))
-        Some((target, inputs.map(nameOf), outputs.map(nameOf)))
-      } finally {
-        scala.util.Using.resource(JFiles.list(scratch)) { s =>
-          scala.jdk.CollectionConverters.IteratorHasAsScala(s.iterator())
-            .asScala.toList.foreach(JFiles.deleteIfExists(_))
-        }
-        JFiles.deleteIfExists(scratch)
-      }
+      mergeSubset(spark, dir, inputs, rollRecords, ".lvl-")
+      val outputs = CellPlanning.listFiles(dir).filterNot(files.contains)
+      writeLevels(dir,
+        (lv -- inputs.map(nameOf)) ++
+          outputs.map(f => nameOf(f) -> target))
+      Some((target, inputs.map(nameOf), outputs.map(nameOf)))
     }
 
     val l0 = byLevel.getOrElse(0, Nil)
@@ -1209,10 +1160,7 @@ object CellMaintenance {
       : Seq[(Long, Int)] = {
     import java.nio.file.{Files => JFiles, Paths => JPaths}
     require(windowMs > 0, s"windowMs must be positive: $windowMs")
-    val norm = CellPlanning.normalize(dir)
     val files = CellPlanning.listFiles(dir)
-    val spec = CellPlanning.keySpecOf(norm, files)
-    val counter = tableProp(dir, "counter").exists(_.toBoolean)
     val byWindow = files.map { f =>
       val h = CellSource.readHeader(f)
       val maxWt =
@@ -1223,43 +1171,43 @@ object CellMaintenance {
       val tier = wf.map(_._2)
       if (tier.size < minThreshold) None
       else {
-        val scratch =
-          JFiles.createTempDirectory(JPaths.get(norm), ".twin-")
-        try {
-          tier.foreach { f =>
-            val p = JPaths.get(f)
-            JFiles.createLink(scratch.resolve(p.getFileName), p)
-          }
-          spark.read.format("graft.sources.CellSource")
-            .option("reconcile", "true")
-            .option("keepMarkers", "true")
-            .option("withTtl", spec.isDefault.toString)
-            .option("counter", counter.toString)
-            .load(scratch.toString)
-            .write.format("graft.sources.CellSource")
-            .option("withTtl", spec.isDefault.toString)
-            .option("rollRecords", rollRecords.toString)
-            .mode("append").save(dir) // publish BEFORE deleting inputs
-          tier.foreach(f => JFiles.delete(JPaths.get(f)))
-          CellManifest.refresh(dir)
-          Some((w, tier.size))
-        } finally {
-          scala.util.Using.resource(JFiles.list(scratch)) { s =>
-            scala.jdk.CollectionConverters.IteratorHasAsScala(s.iterator())
-              .asScala.toList.foreach(JFiles.deleteIfExists(_))
-          }
-          JFiles.deleteIfExists(scratch)
-        }
+        mergeSubset(spark, dir, tier, rollRecords, ".twin-")
+        Some((w, tier.size))
       }
     }
   }
 
+  /** SIZE-TIERED compaction (Cassandra's STCS default, round 7): a
+    * 100 TB table must not rewrite its cold multi-GB generations every
+    * time four fresh flushes land, which is exactly what a count-
+    * triggered major compaction does. Files are bucketed into
+    * similar-size TIERS (greedy over the size-sorted list: a file
+    * joins the current bucket while its size is ≤ `bucketHigh` × the
+    * bucket's average, Cassandra's own rule), and only the tier with
+    * the most files — the hot, freshly-flushed one — is compacted,
+    * once it holds ≥ `minThreshold` files. Each pass merges ~equal-
+    * size inputs into one file a tier up; total write amplification
+    * stays O(log(table/flush)) per cell instead of O(flushes).
+    *
+    * A tier compaction reads ONLY its own files (hard-linked into a
+    * scratch dir so pruning/merge machinery runs unchanged) and
+    * publishes the merged result as a new flush BEFORE deleting the
+    * inputs — a reconciling reader that races the swap sees both
+    * generations, which LWW merges to identical winners. Markers are
+    * always kept and NEVER gc-purged here (`gcGraceMs` retention
+    * needs table-wide scope: an older shadowed version may live in a
+    * tier this pass can't see — the same reason Cassandra only purges
+    * tombstones when the sstable set covers the partition). Full
+    * [[compact]] remains the purge path.
+    *
+    * Returns (compacted file names, files before, files after), or
+    * None when no tier is eligible.
+    */
   def compactTiered(spark: SparkSession, dir: String,
       minThreshold: Int = 4, bucketHigh: Double = 1.5,
       rollRecords: Int = CellSource.DefaultRollRecords)
       : Option[(Seq[String], Int, Int)] = {
     import java.nio.file.{Files => JFiles, Paths => JPaths}
-    val norm = CellPlanning.normalize(dir)
     val files = CellPlanning.listFiles(dir)
     val sized = files.map(f => (f, JFiles.size(JPaths.get(f))))
       .sortBy(_._2)
@@ -1278,29 +1226,44 @@ object CellMaintenance {
     val eligible = buckets.filter(_.size >= minThreshold)
     if (eligible.isEmpty) return None
     val tier = eligible.maxBy(_.size).map(_._1).toSeq
+    mergeSubset(spark, dir, tier, rollRecords, ".tier-")
+    Some((tier.map(f => JPaths.get(f).getFileName.toString),
+      files.size, CellPlanning.listFiles(dir).size))
+  }
+
+  /** The SUBSET merge every tier pass (STCS, LCS, TWCS) runs over its
+    * chosen `inputs`: a same-filesystem scratch view of exactly those
+    * files (hard links, no copies) read through the reconcile scan
+    * with markers kept and no gc purge (a subset cannot see
+    * table-wide shadowing), written back as new flushes BEFORE the
+    * inputs are deleted — a racing reader sees both generations,
+    * which LWW merges to identical winners. Per-record expiries ride
+    * through (CEL10/CEL11, both key layouts — the major [[compact]]'s
+    * rule), so a TTL'd cell still expires after any pass.
+    */
+  private def mergeSubset(spark: SparkSession, dir: String,
+      inputs: Seq[String], rollRecords: Int, prefix: String): Unit = {
+    import java.nio.file.{Files => JFiles, Paths => JPaths}
     val counter = tableProp(dir, "counter").exists(_.toBoolean)
-    // Same-filesystem scratch view of the tier (links, no copies).
-    val scratch = JFiles.createTempDirectory(JPaths.get(norm), ".tier-")
+    val scratch = JFiles.createTempDirectory(
+      JPaths.get(CellPlanning.normalize(dir)), prefix)
     try {
-      tier.foreach { f =>
+      inputs.foreach { f =>
         val p = JPaths.get(f)
         JFiles.createLink(scratch.resolve(p.getFileName), p)
       }
-      val tierSpec = CellPlanning.keySpecOf(norm, files)
       spark.read.format("graft.sources.CellSource")
         .option("reconcile", "true")
         .option("keepMarkers", "true")
-        .option("withTtl", tierSpec.isDefault.toString) // CEL10 expiry
+        .option("withTtl", "true")
         .option("counter", counter.toString)
         .load(scratch.toString)
         .write.format("graft.sources.CellSource")
-        .option("withTtl", tierSpec.isDefault.toString)
+        .option("withTtl", "true")
         .option("rollRecords", rollRecords.toString)
         .mode("append").save(dir) // publish BEFORE deleting inputs
-      tier.foreach(f => JFiles.delete(JPaths.get(f)))
+      inputs.foreach(f => JFiles.delete(JPaths.get(f)))
       CellManifest.refresh(dir)
-      Some((tier.map(f => JPaths.get(f).getFileName.toString),
-        files.size, CellPlanning.listFiles(dir).size))
     } finally {
       scala.util.Using.resource(JFiles.list(scratch)) { s =>
         scala.jdk.CollectionConverters.IteratorHasAsScala(s.iterator())

@@ -801,8 +801,8 @@ object CellSource {
     * Catalyst converter collect() uses, so call sites compare values
     * exactly as before.
     *
-    * DEFAULT key layout only (pk bigint, ck int): the typed readers
-    * have named key parts and keep the DataFrame path.
+    * DEFAULT key layout only (pk bigint, ck int); typed layouts bind
+    * their named key parts through [[localReconciledRowsWhere]].
     */
   def localReconciledRows(dir: String, pks: Option[Set[Long]],
       queryTime: Long = Long.MaxValue)
@@ -811,37 +811,10 @@ object CellSource {
     require(CellPlanning.keySpecOf(norm,
         CellPlanning.listFiles(norm)).isDefault,
       s"localReconciledRows serves default-keyed tables only; $dir " +
-        "is typed (use the DataFrame read)")
-    val omap = new java.util.HashMap[String, String]()
-    omap.put("path", norm)
-    omap.put("reconcile", "true")
-    omap.put("columnar", "false")
-    if (queryTime != Long.MaxValue)
-      omap.put("queryTime", queryTime.toString)
-    val cis = new CaseInsensitiveStringMap(omap)
-    val provider = new CellSource
-    val schema = provider.inferSchema(cis)
-    val sb = provider.getTable(schema, Array.empty, omap)
-      .asInstanceOf[SupportsRead].newScanBuilder(cis)
-    pks.foreach { s =>
-      sb.asInstanceOf[SupportsPushDownFilters].pushFilters(
-        Array(In("pk",
-          s.toSeq.sorted.map(v => Long.box(v): Any).toArray)))
-    }
-    val batch = sb.build().toBatch
-    val conv = org.apache.spark.sql.catalyst.CatalystTypeConverters
-      .createToScalaConverter(schema)
-    val rf = batch.createReaderFactory()
-    val out = Vector.newBuilder[org.apache.spark.sql.Row]
-    batch.planInputPartitions().foreach { p =>
-      val r = rf.createReader(p)
-      try {
-        while (r.next())
-          out += conv(r.get().copy())
-            .asInstanceOf[org.apache.spark.sql.Row]
-      } finally r.close()
-    }
-    out.result()
+        "is typed (use localReconciledRowsWhere)")
+    localScan(norm, pks.toSeq.map(s =>
+      In("pk", s.toSeq.sorted.map(v => Long.box(v): Any).toArray)),
+      queryTime)._2
   }
 
   /** [[localReconciledRows]] generalized to ANY key layout (r19):
@@ -856,24 +829,8 @@ object CellSource {
   def localReconciledRowsWhere(dir: String, eq: Seq[(String, Any)],
       queryTime: Long = Long.MaxValue)
       : (StructType, Seq[org.apache.spark.sql.Row]) = {
-    val norm = CellPlanning.normalize(dir)
-    val omap = new java.util.HashMap[String, String]()
-    omap.put("path", norm)
-    omap.put("reconcile", "true")
-    omap.put("columnar", "false")
-    if (queryTime != Long.MaxValue)
-      omap.put("queryTime", queryTime.toString)
-    val cis = new CaseInsensitiveStringMap(omap)
-    val provider = new CellSource
-    val schema = provider.inferSchema(cis)
-    val sb = provider.getTable(schema, Array.empty, omap)
-      .asInstanceOf[SupportsRead].newScanBuilder(cis)
-    if (eq.nonEmpty)
-      sb.asInstanceOf[SupportsPushDownFilters].pushFilters(
-        eq.map { case (n, v) => EqualTo(n, v): Filter }.toArray)
-    val batch = sb.build().toBatch
-    val conv = org.apache.spark.sql.catalyst.CatalystTypeConverters
-      .createToScalaConverter(schema)
+    val (schema, rows) = localScan(CellPlanning.normalize(dir),
+      eq.map { case (n, v) => EqualTo(n, v): Filter }, queryTime)
     val idx = eq.map { case (n, v) =>
       val i = schema.fields.indexWhere(_.name.equalsIgnoreCase(n))
       require(i >= 0, s"no column $n in ${schema.fieldNames.mkString(",")}")
@@ -886,40 +843,78 @@ object CellSource {
         x.compareTo(y) == 0
       case _ => a == b
     }
+    (schema, rows.filter(row =>
+      idx.forall { case (i, v) => same(row.get(i), v) }))
+  }
+
+  /** The shared body of the two local reads: the reconciling scan
+    * with `filters` pushed, run on the driver thread, rows converted
+    * to EXTERNAL values.
+    */
+  private def localScan(norm: String, filters: Seq[Filter],
+      queryTime: Long): (StructType, Seq[org.apache.spark.sql.Row]) = {
+    val omap = new java.util.HashMap[String, String]()
+    omap.put("path", norm)
+    omap.put("reconcile", "true")
+    omap.put("columnar", "false")
+    if (queryTime != Long.MaxValue)
+      omap.put("queryTime", queryTime.toString)
+    val cis = new CaseInsensitiveStringMap(omap)
+    val provider = new CellSource
+    val schema = provider.inferSchema(cis)
+    val sb = provider.getTable(schema, Array.empty, omap)
+      .asInstanceOf[SupportsRead].newScanBuilder(cis)
+    if (filters.nonEmpty)
+      sb.asInstanceOf[SupportsPushDownFilters].pushFilters(filters.toArray)
+    val batch = sb.build().toBatch
+    val conv = org.apache.spark.sql.catalyst.CatalystTypeConverters
+      .createToScalaConverter(schema)
     val rf = batch.createReaderFactory()
     val out = Vector.newBuilder[org.apache.spark.sql.Row]
     batch.planInputPartitions().foreach { p =>
       val r = rf.createReader(p)
       try {
-        while (r.next()) {
-          val row = conv(r.get().copy())
+        while (r.next())
+          out += conv(r.get().copy())
             .asInstanceOf[org.apache.spark.sql.Row]
-          if (idx.forall { case (i, v) => same(row.get(i), v) })
-            out += row
-        }
       } finally r.close()
     }
     (schema, out.result())
   }
 
-  /** Keyed (CEL6/8) twin of [[localAppendCells]] (r19): the typed
-    * memtable flush as a driver-local staged-link publish. Rows are
-    * the table's write-schema rows — key part EXTERNAL values in
-    * key order, then (col, value, wt) — plus the absolute expiry
-    * (Long.MaxValue = never); coercion to file-internal reps runs
-    * through the same KeyCodec/value tables the keyed CAS writer
-    * uses.
+  /** Driver-LOCAL append (r19), one path for every key layout — the
+    * write every driver-side writer shares: the CQL memtable flush,
+    * the LWT/conditional-batch apply, the SQL `DELETE` tombstone
+    * flush and the logged batch's journal slices.
+    * A memtable flush is a NODE-LOCAL write in the system being
+    * modeled, so this writes one flush file directly on the driver
+    * with the contract of the DSv2 commit, step for step:
+    *  - the append type/layout check (a mixed generation must not
+    *    publish);
+    *  - value coercion, STRICT: an EXTERNAL data value of the wrong
+    *    type throws, as a DataFrame encoder would; a tombstone
+    *    marker's value slot is inert and takes the tag's neutral;
+    *  - the file contract's sort and file writer — [[writeFileTypedE]]
+    *    (CEL9/10) for the default layout, [[writeFileKeyed]] (CEL8/11)
+    *    for typed ones;
+    *  - [[publishFlushes]]: the monotonic staged-link publish,
+    *    manifest refresh and write-through 2i/MV maintenance.
+    *
+    * `spec` is the table's key layout under its DECLARED part names
+    * (C51e renames map back to the storage names here — headers
+    * never carry declared names). Rows: key part EXTERNAL values in
+    * key order (a Long pk and an Int ck for the default layout —
+    * build it as `Seq[Any]`, or Scala widens the ck to Long), then
+    * col, value, wt and the absolute expiry (Long.MaxValue = never).
     */
-  def localAppendKeyedCells(dir: String, declaredSpec: KeySpec,
+  def localAppend(dir: String, spec: KeySpec,
       valueType: org.apache.spark.sql.types.DataType,
       rows: Seq[(Seq[Any], String, Any, Long, Long)]): Unit = {
     if (rows.isEmpty) return
     val norm = CellPlanning.normalize(dir)
     val d = Paths.get(norm)
     Files.createDirectories(d)
-    // C51e renames: file headers NEVER carry declared names — write
-    // with the STORAGE spec, exactly as the DSv2 write builder does.
-    val spec = CellPlanning.storageKeySpec(norm, declaredSpec)
+    val storage = CellPlanning.storageKeySpec(norm, spec)
     val (tag, prec, scale) = valueType match {
       case dt: DecimalType =>
         (ValueCodec.DecimalTag, dt.precision, dt.scale)
@@ -928,135 +923,99 @@ object CellSource {
     val files = CellPlanning.listFiles(norm)
     files.headOption.foreach { f =>
       val h = readHeader(f)
-      require(h.keySpec == spec,
+      require(h.keySpec == storage,
         s"append key layout does not match existing table in $dir")
       require((h.valueTag, h.decPrec, h.decScale) ==
           ((tag, prec, scale)),
         s"append value type does not match existing table in $dir")
     }
-    def internalKey(p: KeyPart, v: Any): Any =
-      KeyCodec.toInternal(p.tag, v).getOrElse(throw
-        new IllegalArgumentException(s"bad ${p.name} value $v"))
-    def internalVal(v: Any): Any = tag match {
-      case ValueCodec.StringTag => v match {
-        case s: String => UTF8String.fromString(s)
-        case u: UTF8String => u
-        case o => throw new IllegalArgumentException(
-          s"text cell value of unexpected type: $o")
-      }
-      case ValueCodec.TimestampTag => v match {
-        case t: java.sql.Timestamp =>
-          org.apache.spark.sql.catalyst.util.DateTimeUtils
-            .fromJavaTimestamp(t)
-        case l: Long => l
-        case o => throw new IllegalArgumentException(
-          s"timestamp cell value of unexpected type: $o")
-      }
-      case ValueCodec.DecimalTag => v match {
-        case bd: java.math.BigDecimal =>
-          org.apache.spark.sql.types.Decimal(
-            scala.math.BigDecimal(bd), prec, scale)
-        case bd: scala.math.BigDecimal =>
-          org.apache.spark.sql.types.Decimal(bd, prec, scale)
-        case dec: org.apache.spark.sql.types.Decimal => dec
-        case o => throw new IllegalArgumentException(
-          s"decimal cell value of unexpected type: $o")
-      }
-      case _ => v
-    }
-    val nPk = spec.pkParts.length
-    val recs = rows.map { case (keyVals, colName, value, wt, exp) =>
-      val pkIv = spec.pkParts.zip(keyVals.take(nPk))
-        .map { case (p, v) => internalKey(p, v) }.toArray
-      val ckIv = spec.ckParts.zip(keyVals.drop(nPk))
-        .map { case (p, v) => internalKey(p, v) }.toArray
-      KeyedRec(KeyCodec.token(spec, pkIv), pkIv, rankOf(colName),
-        ckIv, colName, internalVal(value), wt, exp)
-    }.sortWith(keyedLess(spec))
-    val colNames = recs.iterator.map(_.col).toArray.distinct.sorted
     val staged = Files.createTempFile(d, ".memtable-", ".cells.tmp")
-    writeFileKeyed(staged, recs, spec, colNames, tag, prec, scale,
-      DefaultIndexEvery, DefaultChunkRecords)
-    var next = files.map(f =>
-      CellPlanning.fileIndex(Paths.get(f).getFileName.toString))
-      .foldLeft(-1)(math.max) + 1
-    var done = false
-    while (!done) {
-      try {
-        Files.createLink(d.resolve(f"data-$next%04d.cells"), staged)
-        Files.delete(staged)
-        done = true
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException =>
+    try {
+      if (storage.isDefault) {
+        val recs = rows.map {
+          case (Seq(pk: Long, ck: Int), c, v, wt, exp) =>
+            (pk, ck, c, coerce(tag, prec, scale, v, c), wt, exp)
+          case (k, _, _, _, _) => throw new IllegalArgumentException(
+            s"default-layout key must be (bigint pk, int ck), got $k")
+        }.sortWith { (a, b) =>
+          // the roll sort of CellDataWriter
+          if (a._1 != b._1) a._1 < b._1
+          else if (a._2 != b._2) a._2 < b._2
+          else if (a._3 != b._3) a._3 < b._3
+          else if (a._5 != b._5) a._5 < b._5
+          else ValueCodec.compare(tag, a._4, b._4) < 0
+        }
+        writeFileTypedE(staged, recs,
+          recs.iterator.map(_._3).toArray.distinct.sorted, tag, prec,
+          scale, DefaultIndexEvery, DefaultChunkRecords)
+      } else {
+        def internalKey(p: KeyPart, v: Any): Any =
+          KeyCodec.toInternal(p.tag, v).getOrElse(throw
+            new IllegalArgumentException(s"bad ${p.name} value $v"))
+        val nPk = storage.pkParts.length
+        val recs = rows.map { case (keyVals, c, v, wt, exp) =>
+          val pkIv = storage.pkParts.zip(keyVals.take(nPk))
+            .map { case (p, k) => internalKey(p, k) }.toArray
+          val ckIv = storage.ckParts.zip(keyVals.drop(nPk))
+            .map { case (p, k) => internalKey(p, k) }.toArray
+          KeyedRec(KeyCodec.token(storage, pkIv), pkIv, rankOf(c), ckIv,
+            c, coerce(tag, prec, scale, v, c), wt, exp)
+        }.sortWith(keyedLess(storage))
+        writeFileKeyed(staged, recs, storage,
+          recs.iterator.map(_.col).toArray.distinct.sorted, tag, prec,
+          scale, DefaultIndexEvery, DefaultChunkRecords)
       }
-      next += 1
-    }
-    CellManifest.refresh(norm)
-    CellIndex.maintainAfterWrite(norm)
-    CellView.maintainAfterWrite(norm)
+      publishFlushes(norm, files, Seq(staged))
+    } finally Files.deleteIfExists(staged)
   }
 
-  /** Driver-LOCAL memtable flush (r19) — the CQL script buffer's
-    * flush used to run as a one-task Spark WRITE JOB per table
-    * (`toDF.coalesce(1).write`): ~80 ms of scheduling for a
-    * few-dozen-row flush file. A memtable flush is a NODE-LOCAL
-    * write in the system being modeled, so this writes the flush
-    * file directly on the driver with the exact contract of the
-    * DSv2 path it replaces, step for step:
-    *  - the same roll sort ((pk, ck, col, wt, value-compare) — the
-    *    [[CellDataWriter.roll]] comparator) and the same
-    *    [[writeFileTypedE]] file writer;
-    *  - the batch commit's append type/layout check (a mixed
-    *    generation must not publish);
-    *  - the monotonic staged-link publish (never reuses a flush
-    *    index, atomic under racers — [[CellTransactions]]' protocol);
-    *  - manifest refresh + write-through 2i/MV maintenance
-    *    ([[CellIndex.maintainAfterWrite]] /
-    *    [[CellView.maintainAfterWrite]]), exactly what the DSv2
-    *    commit runs.
-    * DEFAULT key layout only; values are the EXTERNAL forms the CQL
-    * literal grammars produce and coerce to file-internal reps here
-    * (same table as the CAS writer's casCoerce).
+  /** EXTERNAL → file-internal value coercion against the table's
+    * value tag (the C55j table, r18): UTF8String for text, epoch
+    * micros for timestamps, Decimal at the table's precision/scale.
+    * A DATA write must already carry the right type — a mismatch is
+    * a caller bug, not data; a tombstone marker's value slot is
+    * inert (the col name is the whole message) and takes the tag's
+    * neutral.
     */
-  def localAppendCells(dir: String,
-      valueType: org.apache.spark.sql.types.DataType,
-      rows: Seq[(Long, Int, String, Any, Long, Long)]): Unit = {
-    if (rows.isEmpty) return
-    val norm = CellPlanning.normalize(dir)
-    val d = Paths.get(norm)
-    Files.createDirectories(d)
-    val (tag, prec, scale) = valueType match {
-      case dt: DecimalType =>
-        (ValueCodec.DecimalTag, dt.precision, dt.scale)
-      case t => (ValueCodec.tagFor(t), 0, 0)
+  private def coerce(tag: Int, prec: Int, scale: Int, v: Any,
+      colName: String): Any = {
+    def marker(kind: String): Any = {
+      require(colName.startsWith("!"),
+        s"write of $v to a $kind-valued table")
+      ValueCodec.zeroOf(tag, prec, scale)
     }
-    val files = CellPlanning.listFiles(norm)
-    require(CellPlanning.keySpecOf(norm, files).isDefault,
-      s"localAppendCells writes default-keyed tables only; $dir " +
-        "is typed")
-    files.headOption.foreach { f =>
-      val h = readHeader(f)
-      require((h.valueTag, h.decPrec, h.decScale) ==
-          ((tag, prec, scale)),
-        s"append value type does not match existing table in $dir")
-    }
-    // External → file-internal coercion, STRICT: an unexpected value
-    // type throws (the DataFrame encoder it replaces would have),
-    // never silently writes a neutral.
-    def coerce(v: Any): Any = tag match {
+    tag match {
+      case ValueCodec.LongTag => v match {
+        case l: Long => l
+        case _ => marker("bigint")
+      }
+      case ValueCodec.IntTag => v match {
+        case i: Int => i
+        case _ => marker("int")
+      }
+      case ValueCodec.DoubleTag => v match {
+        case d: Double => d
+        case _ => marker("double")
+      }
+      case ValueCodec.BoolTag => v match {
+        case b: Boolean => b
+        case _ => marker("boolean")
+      }
       case ValueCodec.StringTag => v match {
         case s: String => UTF8String.fromString(s)
         case u: UTF8String => u
-        case o => throw new IllegalArgumentException(
-          s"text cell value of unexpected type: $o")
+        case _ => marker("text")
       }
       case ValueCodec.TimestampTag => v match {
         case t: java.sql.Timestamp =>
           org.apache.spark.sql.catalyst.util.DateTimeUtils
             .fromJavaTimestamp(t)
         case l: Long => l
-        case o => throw new IllegalArgumentException(
-          s"timestamp cell value of unexpected type: $o")
+        case _ => marker("timestamp")
+      }
+      case ValueCodec.BinaryTag => v match {
+        case b: Array[Byte] => b
+        case _ => marker("binary")
       }
       case ValueCodec.DecimalTag => v match {
         case bd: java.math.BigDecimal =>
@@ -1065,37 +1024,46 @@ object CellSource {
         case bd: scala.math.BigDecimal =>
           org.apache.spark.sql.types.Decimal(bd, prec, scale)
         case dec: org.apache.spark.sql.types.Decimal => dec
-        case o => throw new IllegalArgumentException(
-          s"decimal cell value of unexpected type: $o")
+        case _ => marker("decimal")
       }
-      case _ => v
+      case t => throw new IllegalArgumentException(
+        s"unknown cell value tag $t")
     }
-    val coerced = rows.map { case (pk, ck, c, v, wt, exp) =>
-      (pk, ck, c, coerce(v), wt, exp) }
-    val sorted = coerced.sortWith { (a, b) =>
-      if (a._1 != b._1) a._1 < b._1
-      else if (a._2 != b._2) a._2 < b._2
-      else if (a._3 != b._3) a._3 < b._3
-      else if (a._5 != b._5) a._5 < b._5
-      else ValueCodec.compare(tag, a._4, b._4) < 0
-    }
-    val colNames = sorted.iterator.map(_._3).toArray.distinct.sorted
-    val staged = Files.createTempFile(d, ".memtable-", ".cells.tmp")
-    writeFileTypedE(staged, sorted, colNames, tag, prec, scale,
-      DefaultIndexEvery, DefaultChunkRecords)
-    var next = files.map(f =>
+  }
+
+  /** The staged-link publish — the ONE commit protocol every writer
+    * shares (DSv2 batch commit, [[localAppend]], logged-batch
+    * replay): each staged file is hard-linked at the next free flush
+    * index above `existing`. Flush indices are MONOTONIC, never
+    * reused (SSTable generation numbers — a CDC stream's index-based
+    * offsets must never see one twice), and link(2) is atomic: it
+    * fails with EEXIST when a racer took the slot, and the loser
+    * skips forward — nothing is ever overwritten (Files.move's
+    * no-replace check is check-then-rename, NOT atomic). The staged
+    * name is removed once linked. Then the planning manifest is
+    * refreshed (a crash before it leaves a stale manifest, which
+    * readers detect and fall back from) and registered 2i/MVs absorb
+    * the new flushes (write-through C18f/C40 maintenance —
+    * unregistered ones keep the lazy heal-on-read contract).
+    */
+  private[sources] def publishFlushes(norm: String, existing: Seq[String],
+      staged: Seq[java.nio.file.Path]): Unit = {
+    val d = Paths.get(norm)
+    var next = existing.map(f =>
       CellPlanning.fileIndex(Paths.get(f).getFileName.toString))
       .foldLeft(-1)(math.max) + 1
-    var done = false
-    while (!done) {
-      try {
-        Files.createLink(d.resolve(f"data-$next%04d.cells"), staged)
-        Files.delete(staged)
-        done = true
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException =>
+    staged.foreach { s =>
+      var done = false
+      while (!done) {
+        try {
+          Files.createLink(d.resolve(f"data-$next%04d.cells"), s)
+          Files.delete(s)
+          done = true
+        } catch {
+          case _: java.nio.file.FileAlreadyExistsException =>
+        }
+        next += 1
       }
-      next += 1
     }
     CellManifest.refresh(norm)
     CellIndex.maintainAfterWrite(norm)
@@ -1821,7 +1789,8 @@ class CellTable(path: String,
   // tombstone marker. The marker's writetime is (table max wt + 1) —
   // deterministic, and by LWW it deletes exactly what exists at
   // delete time; later writes with fresh wts survive it, Cassandra's
-  // own rewrite-past-deletion behavior. Typed-key (CEL6) tables and
+  // own rewrite-past-deletion behavior. Typed-key (CEL6) tables take
+  // the same markers over their named key parts (parseTypedDelete);
   // other predicate shapes refuse via canDeleteWhere.
 
   /** Parse a Cassandra-shaped DELETE predicate: (pk set, ckLo, ckHi,
@@ -1936,8 +1905,8 @@ class CellTable(path: String,
       if (hasRange) Some((ckLo, ckHi)) else None))
   }
 
-  /** The type's neutral EXTERNAL (Row-side) value, for marker rows
-    * built as a DataFrame.
+  /** The type's neutral EXTERNAL (Row-side) value — what a typed
+    * marker row carries in a clustering slot it does not address.
     */
   private def zeroExternal(dt: DataType): Any = dt match {
     case LongType => 0L
@@ -1957,119 +1926,67 @@ class CellTable(path: String,
     if (keySpec.isDefault) parseDelete(filters).isDefined
     else parseTypedDelete(filters).isDefined
 
-  /** Typed-table DELETE: marker rows append through the DSv2 typed
-    * write path (rank ordering puts partition/range markers ahead of
-    * every data row of their partition regardless of the neutral ck
-    * values they carry).
+  /** The marker rows of a DELETE, layout-general: key EXTERNAL values
+    * then (col, value, wt) — appended through
+    * [[CellSource.localAppend]] at table max wt + 1. No Spark job: a
+    * tombstone flush is a node-local write like any memtable flush.
     */
-  private def deleteWhereTyped(filters: Array[Filter]): Unit = {
-    val (pks, ckEq, ckRange) = parseTypedDelete(filters).getOrElse(
-      throw new IllegalArgumentException(
-        "unsupported DELETE predicate " +
-          s"[${filters.mkString(", ")}] for typed key " +
-          s"(${keySpec.serial}): bind every partition-key part by " +
-          "equality (IN allowed on a single-part key), optionally " +
-          "every clustering part by equality or an int-ck range"))
-    val spark = org.apache.spark.sql.SparkSession.active
+  override def deleteWhere(filters: Array[Filter]): Unit = {
     val norm = CellPlanning.normalize(path)
     val files = CellPlanning.listFiles(norm)
     val wt = files.map(CellSource.readHeader).iterator
       .flatMap(_.chunkMaxWt.iterator).foldLeft(0L)(math.max) + 1
-    val ckZeros = keySpec.ckParts.map(p => zeroExternal(p.dataType))
     // resolve the value type from the files (path-handle CellTables
-    // may carry the default schema); typed marker rows must match the
-    // TABLE's typed layout, not the handle's
+    // may carry the default schema); markers must match the TABLE's
+    // layout, not the handle's. Their value slot takes its neutral.
     val valueDt = files.headOption.map(CellSource.readHeader)
       .map(h => ValueCodec.dataTypeFor(h.valueTag, h.decPrec,
         h.decScale))
       .getOrElse(tableSchema("value").dataType)
-    val typedSchema = CellSource.schemaFor(keySpec, valueDt)
-    val zeroV = zeroExternal(valueDt)
-    val marker = (ckRange, ckEq) match {
-      case (Some((lo, hi)), _) =>
-        (CellSource.rangeTombstoneCol(lo, hi), ckZeros)
-      case (None, Some(cks)) if cks.length == keySpec.ckParts.length =>
-        (CellSource.RowTombstone, cks.toSeq)
-      case (None, Some(pfx)) =>
-        // clustering-key PREFIX binding → prefix tombstone: bound
-        // values in the marker's leading ck parts, neutral tail
-        (CellSource.prefixTombstoneCol(pfx.length),
-          pfx.toSeq ++ ckZeros.drop(pfx.length))
-      case (None, None) => (CellSource.PartitionTombstone, ckZeros)
-    }
-    val rows: java.util.List[org.apache.spark.sql.Row] =
-      new java.util.ArrayList()
-    pks.foreach { pkVals =>
-      rows.add(org.apache.spark.sql.Row.fromSeq(
-        pkVals.toSeq ++ marker._2 ++ Seq(marker._1, zeroV, wt)))
-    }
-    val pkSyntax = "((" + keySpec.pkParts.map(_.name).mkString(",") +
-      ")," + keySpec.ckParts.map(_.name).mkString(",") + ")"
-    var w = spark.createDataFrame(rows, typedSchema).coalesce(1)
-      .write.format("graft.sources.CellSource")
-      .option("primaryKey", pkSyntax)
-    (keySpec.pkParts ++ keySpec.ckParts).foreach { p =>
-      w = w.option(s"keyType.${p.name}", p.dataType.simpleString)
-    }
-    w.mode("append").save(path)
-  }
-
-  override def deleteWhere(filters: Array[Filter]): Unit = {
-    if (!keySpec.isDefault) { deleteWhereTyped(filters); return }
-    val (pks, ckLo, ckHi, hasCk) = parseDelete(filters).getOrElse(
-      throw new IllegalArgumentException(
-        "unsupported DELETE predicate " +
-          s"[${filters.mkString(", ")}]: Cassandra shape is " +
-          "pk = ? / pk IN (...), optionally AND an integer ck " +
-          "equality or range, on a default-keyed table"))
-    if (pks.isEmpty || (hasCk && ckLo > ckHi)) return // contradiction
-    val norm = CellPlanning.normalize(path)
-    val dir = Paths.get(norm)
-    Files.createDirectories(dir)
-    val files = CellPlanning.listFiles(norm)
-    val headers = files.map(CellSource.readHeader)
-    val wt = headers.iterator.flatMap(_.chunkMaxWt.iterator)
-      .foldLeft(0L)(math.max) + 1
-    val (tag, prec, scale) = headers.headOption
-      .map(h => (h.valueTag, h.decPrec, h.decScale))
-      .getOrElse(tableSchema("value").dataType match {
-        case d: DecimalType => (ValueCodec.DecimalTag, d.precision, d.scale)
-        case dt => (ValueCodec.tagFor(dt), 0, 0)
-      })
-    val zero = ValueCodec.zeroOf(tag, prec, scale)
-    val markers: Seq[(Long, Int, String, Any, Long)] =
-      pks.toSeq.sorted.map { pk =>
-        if (!hasCk)
-          (pk, Int.MinValue, CellSource.PartitionTombstone, zero, wt)
-        else if (ckLo == ckHi)
-          (pk, ckLo, CellSource.RowTombstone, zero, wt)
-        else
-          (pk, Int.MinValue, CellSource.rangeTombstoneCol(ckLo, ckHi),
-            zero, wt)
+    val markers: Seq[(Seq[Any], String)] =
+      if (keySpec.isDefault) {
+        val (pks, ckLo, ckHi, hasCk) = parseDelete(filters).getOrElse(
+          throw new IllegalArgumentException(
+            "unsupported DELETE predicate " +
+              s"[${filters.mkString(", ")}]: Cassandra shape is " +
+              "pk = ? / pk IN (...), optionally AND an integer ck " +
+              "equality or range, on a default-keyed table"))
+        if (hasCk && ckLo > ckHi) Nil // contradiction
+        else pks.toSeq.map { pk =>
+          if (!hasCk)
+            (Seq[Any](pk, Int.MinValue), CellSource.PartitionTombstone)
+          else if (ckLo == ckHi) (Seq[Any](pk, ckLo), CellSource.RowTombstone)
+          else (Seq[Any](pk, Int.MinValue),
+            CellSource.rangeTombstoneCol(ckLo, ckHi))
+        }
+      } else {
+        val (pks, ckEq, ckRange) = parseTypedDelete(filters).getOrElse(
+          throw new IllegalArgumentException(
+            "unsupported DELETE predicate " +
+              s"[${filters.mkString(", ")}] for typed key " +
+              s"(${keySpec.serial}): bind every partition-key part by " +
+              "equality (IN allowed on a single-part key), optionally " +
+              "every clustering part by equality or an int-ck range"))
+        // rank ordering puts partition/range markers ahead of every
+        // data row of their partition regardless of the neutral ck
+        // values they carry
+        val ckZeros = keySpec.ckParts.map(p => zeroExternal(p.dataType))
+        val (col, ck) = (ckRange, ckEq) match {
+          case (Some((lo, hi)), _) =>
+            (CellSource.rangeTombstoneCol(lo, hi), ckZeros)
+          case (None, Some(cks)) if cks.length == keySpec.ckParts.length =>
+            (CellSource.RowTombstone, cks.toSeq)
+          case (None, Some(pfx)) =>
+            // clustering-key PREFIX binding → prefix tombstone: bound
+            // values in the marker's leading ck parts, neutral tail
+            (CellSource.prefixTombstoneCol(pfx.length),
+              pfx.toSeq ++ ckZeros.drop(pfx.length))
+          case (None, None) => (CellSource.PartitionTombstone, ckZeros)
+        }
+        pks.map(pkVals => (pkVals.toSeq ++ ck, col))
       }
-    val cols = markers.map(_._3).distinct.sorted.toArray
-    // Stage, then atomically claim the next flush slot — the same
-    // link(2) protocol as the batch committer, so a DELETE racing an
-    // append never overwrites a flush.
-    val staged = Files.createTempFile(dir, ".delete-", ".tmp")
-    CellSource.writeFileTyped(staged,
-      markers.sortBy(m => (m._1, m._2, m._3, m._5)), cols, tag, prec,
-      scale, CellSource.DefaultIndexEvery, CellSource.DefaultChunkRecords)
-    var next = files.map(f =>
-      CellPlanning.fileIndex(Paths.get(f).getFileName.toString))
-      .foldLeft(-1)(math.max) + 1
-    var done = false
-    while (!done) {
-      try {
-        Files.createLink(dir.resolve(f"data-$next%04d.cells"), staged)
-        Files.delete(staged)
-        done = true
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException =>
-      }
-      next += 1
-    }
-    CellManifest.refresh(norm)
+    CellSource.localAppend(norm, keySpec, valueDt,
+      markers.map { case (k, c) => (k, c, null, wt, Long.MaxValue) })
   }
 
   /** SQL TRUNCATE TABLE: drop every flush, then publish one EMPTY
@@ -4136,7 +4053,6 @@ class CellBatchWrite(path: String, truncateFirst: Boolean,
       decScale, spec, ttlMode)
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val dir = Paths.get(CellPlanning.normalize(path))
     // Close the plan-to-commit race of the CellWriteBuilder type check:
     // a first write into a concurrently-created table of another type
     // or key layout must not publish a mixed generation.
@@ -4152,55 +4068,21 @@ class CellBatchWrite(path: String, truncateFirst: Boolean,
         }
       }
     }
-    // Flush indices are MONOTONIC, NEVER reused — SSTable generation
-    // numbers: next is computed from the PRE-truncate listing, so a
-    // truncate-rewrite (compaction) publishes its generation at
-    // indices ABOVE everything it replaced. A running micro-batch
-    // stream (index-based offsets) then sees the compacted files as
-    // new flushes — an LWW-idempotent re-delivery — instead of
-    // silently missing every post-compaction flush under restarted
-    // numbering.
+    // Flush indices are MONOTONIC, NEVER reused: next is computed
+    // from the PRE-truncate listing, so a truncate-rewrite
+    // (compaction) publishes its generation at indices ABOVE
+    // everything it replaced. A running micro-batch stream
+    // (index-based offsets) then sees the compacted files as new
+    // flushes — an LWW-idempotent re-delivery — instead of silently
+    // missing every post-compaction flush under restarted numbering.
     val existing = CellPlanning.listFiles(path)
-    var next = existing.map(f =>
-      CellPlanning.fileIndex(Paths.get(f).getFileName.toString))
-      .foldLeft(-1)(math.max) + 1
     if (truncateFirst)
       existing.foreach(f => Files.delete(Paths.get(f)))
-    messages.foreach {
-      case CellCommitMessage(staged) => staged.foreach { s =>
-        // Concurrent appends race for flush slots. Files.move's
-        // no-replace check is NOT atomic (check-then-rename: two
-        // racers can both pass the check and the second rename
-        // silently overwrites). link(2) IS atomic — it fails with
-        // EEXIST if the slot is taken — so losers skip forward until
-        // they claim a free index; nothing is ever overwritten.
-        var done = false
-        while (!done) {
-          try {
-            Files.createLink(dir.resolve(f"data-$next%04d.cells"),
-              Paths.get(s))
-            Files.delete(Paths.get(s))
-            done = true
-          } catch {
-            case _: java.nio.file.FileAlreadyExistsException =>
-          }
-          next += 1
-        }
-      }
-      case _ =>
-    }
-    // Publish the planning manifest for the new generation (appends
-    // read O(new files) headers only; see CellManifest). Best-effort:
-    // a crash before this line leaves a stale manifest, which readers
-    // detect and fall back from.
-    CellManifest.refresh(path)
-    // Write-through 2i and MV maintenance (C18f / C40): registered
-    // indexes and views absorb the flushes just published, via the
-    // same delta refresh the read-side heals use — Cassandra
-    // maintains both at write time. Unregistered ones keep the lazy
-    // heal-on-read contract.
-    CellIndex.maintainAfterWrite(path)
-    CellView.maintainAfterWrite(path)
+    CellSource.publishFlushes(CellPlanning.normalize(path), existing,
+      messages.toSeq.flatMap {
+        case CellCommitMessage(staged) => staged.map(Paths.get(_))
+        case _ => Nil
+      })
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =

@@ -5,7 +5,6 @@ import scala.jdk.CollectionConverters._
 import scala.util.Using
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.col
 
 /** Coordinator-side write protocols beyond the plain flush: CQL
   * lightweight transactions (C55) and logged batches (C56).
@@ -116,6 +115,13 @@ object CellTransactions {
 
   private val LockName = "_paxos.lock"
 
+  /** The applied write's writetime: table max wt + 1, header-served —
+    * the deterministic "wins LWW now" rule (same as DELETE's C38
+    * tombstones).
+    */
+  private def ballotWt(norm: String): Long =
+    math.max(CellSource.maxWt(norm).getOrElse(0L), 0L) + 1
+
   /** C55 — LIGHTWEIGHT TRANSACTION: CQL's `INSERT ... IF NOT EXISTS` /
     * `UPDATE ... IF value = ?` on one cell. Cassandra serializes these
     * with Paxos rounds across replicas; the single-filesystem
@@ -211,11 +217,11 @@ object CellTransactions {
       def reported = if (condCol.isDefined) cur else None
       if (!ok) CasResult(applied = false, reported)
       else {
-        val files = CellPlanning.listFiles(norm)
-        val wt = files.map(CellSource.readHeader).iterator
-          .flatMap(_.chunkMaxWt.iterator).foldLeft(0L)(math.max) + 1
-        appendRow(d, files, pk, ck, writeCol, writeValue, wt,
-          ttlWt.map(wt + _).getOrElse(Long.MaxValue))
+        val wt = ballotWt(norm)
+        CellSource.localAppend(norm, KeySpec.Default,
+          CellSource.valueTypeOf(norm),
+          Seq((Seq[Any](pk, ck), writeCol, writeValue, wt,
+            ttlWt.map(wt + _).getOrElse(Long.MaxValue))))
         CasResult(applied = true, reported)
       }
     }
@@ -226,8 +232,8 @@ object CellTransactions {
     * the CAS row addressed by NAMED key parts (every pk and ck part
     * bound, Cassandra's own LWT rule). `keyVals` are (name, external
     * value) pairs in key order; the read pushes as the typed point
-    * probe, and the applied cell writes through the keyed one-row
-    * flush — no Spark job.
+    * probe, and the applied cell writes through the same one-row
+    * local append — no Spark job.
     */
   def casApplyKeyed(spark: SparkSession, dir: String,
       keyVals: Seq[(String, Any)],
@@ -268,11 +274,10 @@ object CellTransactions {
       def reported = if (condCol.isDefined) cur else None
       if (!ok) CasResult(applied = false, reported)
       else {
-        val files = CellPlanning.listFiles(norm)
-        val wt = files.map(CellSource.readHeader).iterator
-          .flatMap(_.chunkMaxWt.iterator).foldLeft(0L)(math.max) + 1
-        appendRowKeyed(d, files, spec, keyVals.map(_._2), writeCol,
-          writeValue, wt)
+        val wt = ballotWt(norm)
+        CellSource.localAppend(norm, spec, CellSource.valueTypeOf(norm),
+          Seq((keyVals.map(_._2), writeCol, writeValue, wt,
+            Long.MaxValue)))
         CasResult(applied = true, reported)
       }
     }
@@ -326,14 +331,6 @@ object CellTransactions {
       CellPlanning.listFiles(norm)).isDefault,
       s"conditional BATCH supports default-keyed tables " +
         s"(pk bigint, ck int); $dir is typed")
-    // validate the value tag BEFORE the partition read (casValueType
-    // itself admits only the Long/String pair the CAS machinery
-    // serves — a double/boolean/timestamp table refuses here, not
-    // from a read-path ClassCastException or a mistagged flush);
-    // since r16 the batch round carries the SAME Long/String value
-    // pair the single-statement CAS does, so text-storage tables
-    // (incl. the uuid/inet/ascii mapped grammars) ride it too
-    casValueType(d, CellPlanning.listFiles(norm))
     withBallot(d, lockTimeoutMs, nowMs) {
       // r19: driver-local partition read — same reconcile front door
       // as the DataFrame read it replaces, zero Spark jobs (see
@@ -389,12 +386,18 @@ object CellTransactions {
           CasResult(applied = false,
             if (condCol.isDefined) cur else None)
         case None =>
-          val files = CellPlanning.listFiles(norm)
-          val wt = files.map(CellSource.readHeader).iterator
-            .flatMap(_.chunkMaxWt.iterator).foldLeft(0L)(math.max) + 1
-          appendRows(d, files,
-            writes.map { case (ck, c, v) => (pk, ck, c, v) }, wt,
-            ttlWt.map(wt + _).getOrElse(Long.MaxValue))
+          val wt = ballotWt(norm)
+          val expiry = ttlWt.map(wt + _).getOrElse(Long.MaxValue)
+          CellSource.localAppend(norm, KeySpec.Default,
+            CellSource.valueTypeOf(norm),
+            writes.map { case (ck, c, v) =>
+              // tombstone markers riding an expiring batch keep NO
+              // expiry; static cells (`!s:`) are data and DO carry it
+              // (C55f + C55g)
+              (Seq[Any](pk, ck), c, v, wt,
+                if (c.startsWith("!") &&
+                    !c.startsWith(CellSource.StaticPrefix)) Long.MaxValue
+                else expiry) })
           CasResult(applied = true, None)
       }
     }
@@ -468,12 +471,11 @@ object CellTransactions {
           CasResult(applied = false,
             if (condCol.isDefined) cur else None)
         case None =>
-          val files = CellPlanning.listFiles(norm)
-          val wt = files.map(CellSource.readHeader).iterator
-            .flatMap(_.chunkMaxWt.iterator).foldLeft(0L)(math.max) + 1
-          appendRowsKeyed(d, files, spec,
+          val wt = ballotWt(norm)
+          CellSource.localAppend(norm, spec,
+            CellSource.valueTypeOf(norm),
             writes.map { case (ckVals, c, v) =>
-              (pkVals.map(_._2) ++ ckVals, c, v) }, wt)
+              (pkVals.map(_._2) ++ ckVals, c, v, wt, Long.MaxValue) })
           CasResult(applied = true, None)
       }
     }
@@ -507,221 +509,6 @@ object CellTransactions {
       }
     }
     try body finally Files.deleteIfExists(lock)
-  }
-
-  /** One-row flush through the staged-link commit (the DELETE marker
-    * path's exact protocol, C38) — no Spark job for a single cell.
-    */
-  private def appendRow(dir: Path, files: Seq[String], pk: Long, ck: Int,
-      colName: String, value: Any, wt: Long,
-      expiry: Long = Long.MaxValue): Unit = {
-    val (tag, prec, scale) = casValueType(dir, files)
-    val staged = Files.createTempFile(dir, ".cas-", ".tmp")
-    CellSource.writeFileTypedE(staged,
-      Seq((pk, ck, colName, casCoerce(tag, prec, scale, value, colName), wt,
-        expiry)),
-      Array(colName), tag, prec,
-      scale, CellSource.DefaultIndexEvery, CellSource.DefaultChunkRecords)
-    publishStaged(dir, files, staged)
-  }
-
-  /** The CAS write value against the table's value tag: a tombstone
-    * marker's value slot is inert (the col name is the whole message)
-    * and takes the tag's neutral; a DATA write must already carry the
-    * right type — a mismatch is a caller bug, not data. Since C55j
-    * (r18) every storage tag coerces: the EXTERNAL value the facade's
-    * literal grammar produced becomes the file writer's INTERNAL
-    * representation (UTF8String for text, epoch micros for
-    * timestamps, unscaled Decimal for decimals).
-    */
-  private def casCoerce(tag: Int, prec: Int, scale: Int, v: Any,
-      colName: String): Any = {
-    def marker(kind: String): Any = {
-      require(colName.startsWith("!"),
-        s"CAS write of $v to a $kind-valued table")
-      ValueCodec.zeroOf(tag, prec, scale)
-    }
-    tag match {
-      case ValueCodec.LongTag => v match {
-        case l: Long => l
-        case _ => marker("bigint")
-      }
-      case ValueCodec.IntTag => v match {
-        case i: Int => i
-        case _ => marker("int")
-      }
-      case ValueCodec.DoubleTag => v match {
-        case d: Double => d
-        case _ => marker("double")
-      }
-      case ValueCodec.BoolTag => v match {
-        case b: Boolean => b
-        case _ => marker("boolean")
-      }
-      case ValueCodec.StringTag => v match {
-        // the file writer consumes Spark-INTERNAL strings
-        case s: String =>
-          org.apache.spark.unsafe.types.UTF8String.fromString(s)
-        case u: org.apache.spark.unsafe.types.UTF8String => u
-        case _ => marker("text")
-      }
-      case ValueCodec.TimestampTag => v match {
-        // internal representation: epoch MICROS (the file writer's
-        // long slot) — C55h timestamp LWT
-        case t: java.sql.Timestamp =>
-          org.apache.spark.sql.catalyst.util.DateTimeUtils
-            .fromJavaTimestamp(t)
-        case l: Long => l
-        case _ => marker("timestamp")
-      }
-      case ValueCodec.BinaryTag => v match {
-        // packed frozen<udt> blobs (C55i) / plain 0x blobs (C55j)
-        case b: Array[Byte] => b
-        case _ => marker("binary")
-      }
-      case ValueCodec.DecimalTag => v match {
-        case bd: java.math.BigDecimal =>
-          org.apache.spark.sql.types.Decimal(
-            scala.math.BigDecimal(bd), prec, scale)
-        case d: org.apache.spark.sql.types.Decimal => d
-        case _ => marker("decimal")
-      }
-      case t => throw new IllegalArgumentException(
-        s"unknown cell value tag $t")
-    }
-  }
-
-  /** Multi-row sibling of [[appendRow]]: the conditional batch's
-    * cells as ONE staged-link flush — all at the shared writetime,
-    * sorted to the file contract (pk, ck, col). Values coerce
-    * through [[casCoerce]] per cell, so text-valued batches carry
-    * Spark-internal strings and tombstone members the tag's neutral.
-    */
-  private def appendRows(dir: Path, files: Seq[String],
-      cells: Seq[(Long, Int, String, Any)], wt: Long,
-      expiry: Long = Long.MaxValue): Unit = {
-    val (tag, prec, scale) = casValueType(dir, files)
-    val rows = cells.sortBy(c => (c._1, c._2, c._3))
-      .map { case (pk, ck, c, v) =>
-        // tombstone markers riding an expiring batch keep NO expiry;
-        // static cells (`!s:`) are data and DO carry it (C55f + C55g)
-        (pk, ck, c, casCoerce(tag, prec, scale, v, c), wt,
-          if (c.startsWith("!") &&
-              !c.startsWith(CellSource.StaticPrefix)) Long.MaxValue
-          else expiry) }
-    val cols = cells.map(_._3).distinct.sorted.toArray
-    val staged = Files.createTempFile(dir, ".cas-", ".tmp")
-    CellSource.writeFileTypedE(staged, rows, cols, tag, prec, scale,
-      CellSource.DefaultIndexEvery, CellSource.DefaultChunkRecords)
-    publishStaged(dir, files, staged)
-  }
-
-  /** Keyed twin of [[appendRow]]: one CEL8 record through the keyed
-    * file writer, same staged-link publish.
-    */
-  private def appendRowKeyed(dir: Path, files: Seq[String],
-      spec: KeySpec, keyValues: Seq[Any], colName: String, value: Long,
-      wt: Long): Unit = {
-    val (tag, prec, scale) = casValueType(dir, files)
-    // the keyed CAS round writes bigint cells (its value parameter is
-    // Long); a text-valued typed table must refuse rather than hand a
-    // Long to the string codec
-    require(tag == ValueCodec.LongTag,
-      "keyed CAS writes bigint cells; table is not bigint-valued")
-    def internal(p: KeyPart, v: Any): Any =
-      KeyCodec.toInternal(p.tag, v).getOrElse(throw
-        new IllegalArgumentException(s"bad ${p.name} value $v"))
-    val pkIv = spec.pkParts.zip(keyValues.take(spec.pkParts.length))
-      .map { case (p, v) => internal(p, v) }.toArray
-    val ckIv = spec.ckParts.zip(keyValues.drop(spec.pkParts.length))
-      .map { case (p, v) => internal(p, v) }.toArray
-    val rec = CellSource.KeyedRec(KeyCodec.token(spec, pkIv), pkIv,
-      CellSource.rankOf(colName), ckIv, colName, value, wt)
-    val staged = Files.createTempFile(dir, ".cas-", ".tmp")
-    CellSource.writeFileKeyed(staged, Seq(rec), spec, Array(colName),
-      tag, prec, scale, CellSource.DefaultIndexEvery,
-      CellSource.DefaultChunkRecords)
-    publishStaged(dir, files, staged)
-  }
-
-  /** Multi-row sibling of [[appendRowKeyed]] (r18): the typed
-    * conditional batch's cells as ONE staged-link keyed flush — all
-    * at the shared writetime, sorted to the keyed file contract.
-    */
-  private def appendRowsKeyed(dir: Path, files: Seq[String],
-      spec: KeySpec, rows: Seq[(Seq[Any], String, Long)],
-      wt: Long): Unit = {
-    val (tag, prec, scale) = casValueType(dir, files)
-    require(tag == ValueCodec.LongTag,
-      "keyed CAS writes bigint cells; table is not bigint-valued")
-    def internal(p: KeyPart, v: Any): Any =
-      KeyCodec.toInternal(p.tag, v).getOrElse(throw
-        new IllegalArgumentException(s"bad ${p.name} value $v"))
-    val recs = rows.map { case (keyValues, colName, value) =>
-      val pkIv = spec.pkParts.zip(keyValues.take(spec.pkParts.length))
-        .map { case (p, v) => internal(p, v) }.toArray
-      val ckIv = spec.ckParts.zip(keyValues.drop(spec.pkParts.length))
-        .map { case (p, v) => internal(p, v) }.toArray
-      CellSource.KeyedRec(KeyCodec.token(spec, pkIv), pkIv,
-        CellSource.rankOf(colName), ckIv, colName, value, wt)
-    }.sortWith(CellSource.keyedLess(spec))
-    val cols = recs.iterator.map(_.col).toArray.distinct.sorted
-    val staged = Files.createTempFile(dir, ".cas-", ".tmp")
-    CellSource.writeFileKeyed(staged, recs, spec, cols, tag, prec,
-      scale, CellSource.DefaultIndexEvery,
-      CellSource.DefaultChunkRecords)
-    publishStaged(dir, files, staged)
-  }
-
-  /** The table's value layout for a CAS write: the first file
-    * header's tag once files exist, else the catalog `_type` marker —
-    * the SAME resolution order as [[CellSource.valueTypeOf]]. Reading
-    * the marker here matters on the canonical first-write LWT
-    * (`CREATE TABLE (… v text); INSERT … IF NOT EXISTS`): defaulting
-    * to long would refuse the text write, and worse, an integer LWT
-    * on a fresh double/boolean/timestamp table would stamp a
-    * bigint-tagged first file that permanently outranks the declared
-    * type. Non-long/text declared types are refused up front.
-    */
-  private def casValueType(dir: Path, files: Seq[String]): (Int, Int, Int) =
-    files.headOption
-      .map(CellSource.readHeader)
-      .map(h => (h.valueTag, h.decPrec, h.decScale))
-      .getOrElse {
-        val marker = dir.resolve("_type")
-        val dt =
-          if (Files.exists(marker))
-            ValueCodec.parseType(Files.readString(marker).trim)
-          else org.apache.spark.sql.types.LongType
-        // the canonical first-write LWT on a DECLARED decimal table
-        // must stamp the declared precision/scale, not (0, 0)
-        dt match {
-          case d: org.apache.spark.sql.types.DecimalType =>
-            (ValueCodec.DecimalTag, d.precision, d.scale)
-          case _ => (ValueCodec.tagFor(dt), 0, 0)
-        }
-      }
-    // every cell tag serves the CAS round since C55j (r18): the
-    // facade gates which DECLARED types are legal; this layer only
-    // coerces values to the storage layout (casCoerce)
-
-  private def publishStaged(dir: Path, files: Seq[String],
-      staged: Path): Unit = {
-    var next = files.map(f =>
-      CellPlanning.fileIndex(Paths.get(f).getFileName.toString))
-      .foldLeft(-1)(math.max) + 1
-    var done = false
-    while (!done) {
-      try {
-        Files.createLink(dir.resolve(f"data-$next%04d.cells"), staged)
-        Files.delete(staged)
-        done = true
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException =>
-      }
-      next += 1
-    }
-    CellManifest.refresh(dir.toString)
   }
 
   // ---- C56: logged batch -------------------------------------------
@@ -758,18 +545,19 @@ object CellTransactions {
       applyNow, withExpiry)
 
   /** [[loggedBatch]] with per-slice choice of staging path (r19):
-    * `Left(rows)` — DEFAULT-layout long-valued cells (pk, ck, col,
-    * value, wt, absolute expiry; Long.MaxValue = never) staged
-    * DRIVER-LOCALLY through [[CellSource.localAppendCells]] (a batch
-    * statement's few cells must not cost a one-task write job);
-    * `Right(df)` — the DSv2 staging write (typed layouts, and any
+    * `Left(rows)` — cells of ANY key layout in
+    * [[CellSource.localAppend]]'s row shape (key EXTERNAL values in
+    * key order, col, value, wt, absolute expiry; Long.MaxValue =
+    * never), staged DRIVER-LOCALLY with the target's storage key spec
+    * and value type (a batch statement's few cells must not cost a
+    * one-task write job); `Right(df)` — the DSv2 staging write (any
     * caller that already holds a DataFrame). Journal protocol
     * identical either way: same staging layout, same atomic publish,
     * same replay.
     */
   def loggedBatchSlices(spark: SparkSession,
       writes: Seq[(String,
-        Either[Seq[(Long, Int, String, Long, Long, Long)], DataFrame])],
+        Either[Seq[(Seq[Any], String, Any, Long, Long)], DataFrame])],
       logDir: String,
       applyNow: Boolean = true,
       withExpiry: Boolean = false): String = {
@@ -783,22 +571,22 @@ object CellTransactions {
     Files.createDirectories(root)
     val id = f"batch-${System.nanoTime()}%016x"
     val staging = root.resolve(s".staging-$id")
+    Files.createDirectories(staging)
     writes.zipWithIndex.foreach { case ((t, slice), k) =>
       val slot = staging.resolve(f"t$k%03d").toString
+      // a TYPED target's journal slice must stage with the target's
+      // key layout (a fresh staging dir would otherwise default)
+      val norm = CellPlanning.normalize(t)
+      val spec = CellPlanning.keySpecOf(norm, CellPlanning.listFiles(norm))
       slice match {
         case Left(rows) =>
-          Files.createDirectories(staging)
-          CellSource.localAppendCells(slot,
-            org.apache.spark.sql.types.LongType,
-            rows.map { case (pk, ck, c, v, wt, exp) =>
-              (pk, ck, c, v: Any, wt, exp) })
+          // storage names: the slot has no rename map of its own, and
+          // the slice's headers must match the target's at apply
+          CellSource.localAppend(slot,
+            CellPlanning.storageKeySpec(norm, spec),
+            CellSource.valueTypeOf(norm), rows)
         case Right(df) =>
-          // a TYPED target's journal slice must stage with the
-          // target's key layout (a fresh staging dir would otherwise
-          // default); part types come from the DataFrame's own schema
-          val norm = CellPlanning.normalize(t)
-          val spec =
-            CellPlanning.keySpecOf(norm, CellPlanning.listFiles(norm))
+          // part types come from the DataFrame's own schema
           var w = df.coalesce(1).write.format("graft.sources.CellSource")
             .option("withTtl", withExpiry.toString)
           if (!spec.isDefault) {
@@ -864,8 +652,7 @@ object CellTransactions {
         .filter(f => CellSource.readHeader(f).count > 0)
       if (slotFiles.nonEmpty) {
         val tNorm = CellPlanning.normalize(target)
-        val tDir = Paths.get(tNorm)
-        Files.createDirectories(tDir)
+        Files.createDirectories(Paths.get(tNorm))
         val existing = CellPlanning.listFiles(tNorm)
         existing.headOption.foreach { ef =>
           val ht = CellSource.readHeader(ef)
@@ -874,25 +661,10 @@ object CellTransactions {
               ((hs.valueTag, hs.decPrec, hs.decScale, hs.keySpec)),
             s"batch slice layout does not match target $target")
         }
-        var next = existing.map(f =>
-          CellPlanning.fileIndex(Paths.get(f).getFileName.toString))
-          .foldLeft(-1)(math.max) + 1
-        slotFiles.foreach { s =>
-          var done = false
-          while (!done) {
-            try {
-              Files.createLink(
-                tDir.resolve(f"data-$next%04d.cells"), Paths.get(s))
-              done = true
-            } catch {
-              case _: java.nio.file.FileAlreadyExistsException =>
-            }
-            next += 1
-          }
-        }
-        CellManifest.refresh(tNorm)
-        CellIndex.maintainAfterWrite(tNorm)
-        CellView.maintainAfterWrite(tNorm)
+        // a crash mid-loop leaves the unlinked rest for the replay;
+        // the linked ones are already in the target
+        CellSource.publishFlushes(tNorm, existing,
+          slotFiles.map(Paths.get(_)))
       }
     }
     deleteTree(entry)

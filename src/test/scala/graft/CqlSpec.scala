@@ -3585,8 +3585,8 @@ class CqlSpec extends GraftSpec {
   test("executeScript resolves the table max ONCE per table") {
     // r15: the timestamp mint is HEADER-served (CellSource.maxWt) —
     // NO Spark job per statement at all. r19: the memtable FLUSH is
-    // node-local too (CellSource.localAppendCells — the driver-local
-    // twin of the DSv2 commit), so a default-layout INSERT schedules
+    // node-local too (CellSource.localAppend — the driver-local twin
+    // of the DSv2 commit), so a default-layout INSERT schedules
     // ZERO Spark jobs whether standalone or scripted; what this pin
     // now protects is that no job sneaks back into the statement
     // path, and that the per-script allocator still mints the same
@@ -3614,6 +3614,112 @@ class CqlSpec extends GraftSpec {
       Map((1, "qty") -> 101L, (2, "qty") -> 102L, (3, "qty") -> 103L))
     assert(wtsOf(d1, 70L) ===
       Map((1, "qty") -> 101L, (2, "qty") -> 102L, (3, "qty") -> 103L))
+  }
+
+  test("every driver-side write schedules zero Spark jobs, whatever " +
+      "the key layout") {
+    // one local append path for both layouts: typed INSERT/UPDATE/
+    // DELETE, a LOGGED BATCH spanning a default and a typed table, a
+    // typed LWT and a Spark SQL DELETE on a typed table all write
+    // their flush on the driver
+    val root = Files.createTempDirectory("cql-jobs").toString
+    spark.conf.set("spark.sql.catalog.jobcat", "graft.sources.CellCatalog")
+    spark.conf.set("spark.sql.catalog.jobcat.root", root)
+    try {
+      def cq(stmt: String) = Cql.catalogExecute(spark, stmt, "jobcat")
+      cq("CREATE KEYSPACE ks")
+      cq("CREATE TABLE ks.d (pk bigint, ck int, col text, " +
+        "value bigint, wt bigint, PRIMARY KEY ((pk), ck))")
+      cq("CREATE TABLE ks.t (user text, ck int, col text, " +
+        "value bigint, wt bigint, PRIMARY KEY ((user), ck))")
+      cq("INSERT INTO ks.d (pk, ck, qty) VALUES (1, 1, 1)")
+      cq("INSERT INTO ks.t (user, ck, qty) VALUES ('u-0', 1, 1)")
+      def jobs(stmt: String): Int = countJobs(stmt match {
+        case s if s.startsWith("SQL ") => spark.sql(s.drop(4)); ()
+        case s => cq(s); ()
+      })
+      val counts = Seq(
+        "INSERT INTO ks.t (user, ck, qty) VALUES ('u-1', 1, 10)",
+        "UPDATE ks.t SET qty = 11 WHERE user = 'u-1' AND ck = 1",
+        "DELETE FROM ks.t WHERE user = 'u-1' AND ck = 1",
+        "BEGIN BATCH " +
+          "INSERT INTO ks.d (pk, ck, qty) VALUES (2, 1, 20); " +
+          "INSERT INTO ks.t (user, ck, qty) VALUES ('u-2', 1, 20); " +
+          "APPLY BATCH",
+        "INSERT INTO ks.t (user, ck, qty) VALUES ('u-3', 1, 30) " +
+          "IF NOT EXISTS",
+        "SQL DELETE FROM jobcat.ks.t WHERE user = 'u-2' AND ck = 1"
+      ).map(stmt => stmt -> jobs(stmt))
+      assert(counts.forall(_._2 == 0), counts.mkString("\n"))
+      assert(cq("SELECT user, value FROM ks.t").as[(String, Long)]
+        .collect().toSet === Set(("u-0", 1L), ("u-3", 30L)))
+      assert(cq("SELECT pk, value FROM ks.d").as[(Long, Long)]
+        .collect().toSet === Set((1L, 1L), (2L, 20L)))
+    } finally {
+      spark.conf.unset("spark.sql.catalog.jobcat")
+      spark.conf.unset("spark.sql.catalog.jobcat.root")
+    }
+  }
+
+  test("driver-side writes keep each layout's file format: CEL9/10 " +
+      "default, CEL8/11 typed") {
+    import scala.jdk.CollectionConverters._
+    val root = Files.createTempDirectory("cql-magic").toString
+    spark.conf.set("spark.sql.catalog.magcat", "graft.sources.CellCatalog")
+    spark.conf.set("spark.sql.catalog.magcat.root", root)
+    try {
+      def cq(stmt: String) = Cql.catalogExecute(spark, stmt, "magcat")
+      cq("CREATE KEYSPACE ks")
+      cq("CREATE TABLE ks.d (pk bigint, ck int, col text, " +
+        "value bigint, wt bigint, PRIMARY KEY ((pk), ck))")
+      cq("CREATE TABLE ks.t (user text, ck int, col text, " +
+        "value bigint, wt bigint, PRIMARY KEY ((user), ck))")
+      // magic of the flush file(s) each statement adds, per table
+      def added(stmt: String): (Seq[Int], Seq[Int]) = {
+        def magics(t: String) = {
+          val dir = java.nio.file.Paths.get(root, "ks", t)
+          if (!Files.isDirectory(dir)) Map.empty[String, Int]
+          else Files.list(dir).iterator().asScala
+            .filter(_.getFileName.toString.endsWith(".cells"))
+            .map { f =>
+              val in = new java.io.DataInputStream(Files.newInputStream(f))
+              try f.getFileName.toString -> in.readInt() finally in.close()
+            }.toMap
+        }
+        val (d0, t0) = (magics("d"), magics("t"))
+        if (stmt.startsWith("SCRIPT ")) Cql.catalogScript(spark,
+          stmt.drop(7), "magcat")
+        else cq(stmt)
+        ((magics("d") -- d0.keys).values.toSeq,
+          (magics("t") -- t0.keys).values.toSeq)
+      }
+      import graft.sources.CellSource.{Magic8, Magic9, Magic10, Magic11}
+      // CQL memtable flush (a script buffers, then flushes once)
+      assert(added("SCRIPT INSERT INTO ks.d (pk, ck, qty) VALUES (1, 1, 1);" +
+        "INSERT INTO ks.t (user, ck, qty) VALUES ('u', 1, 1)") ===
+        ((Seq(Magic9), Seq(Magic8))))
+      assert(added("SCRIPT " +
+        "INSERT INTO ks.d (pk, ck, qty) VALUES (2, 1, 2) USING TTL 100;" +
+        "INSERT INTO ks.t (user, ck, qty) VALUES ('v', 1, 2) " +
+        "USING TTL 100") === ((Seq(Magic10), Seq(Magic11))))
+      // CAS writes
+      assert(added("INSERT INTO ks.d (pk, ck, qty) VALUES (3, 1, 3) " +
+        "IF NOT EXISTS") === ((Seq(Magic9), Nil)))
+      assert(added("INSERT INTO ks.t (user, ck, qty) VALUES ('w', 1, 3) " +
+        "IF NOT EXISTS") === ((Nil, Seq(Magic8))))
+      // logged-batch journal slices
+      assert(added("BEGIN BATCH " +
+        "INSERT INTO ks.d (pk, ck, qty) VALUES (4, 1, 4); " +
+        "INSERT INTO ks.t (user, ck, qty) VALUES ('x', 1, 4); " +
+        "APPLY BATCH") === ((Seq(Magic9), Seq(Magic8))))
+      assert(added("BEGIN BATCH " +
+        "INSERT INTO ks.d (pk, ck, qty) VALUES (5, 1, 5) USING TTL 100; " +
+        "INSERT INTO ks.t (user, ck, qty) VALUES ('y', 1, 5) " +
+        "USING TTL 100; APPLY BATCH") === ((Seq(Magic10), Seq(Magic11))))
+    } finally {
+      spark.conf.unset("spark.sql.catalog.magcat")
+      spark.conf.unset("spark.sql.catalog.magcat.root")
+    }
   }
 
   test("script allocator: later statements shadow earlier ones") {

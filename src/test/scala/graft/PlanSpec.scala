@@ -366,11 +366,16 @@ class PlanSpec extends GraftSpec {
     val p4 = plan(Registry.byName("Q_TPCH4_priority_exists").fn(spark, sf()))
     assert(p4.contains("LeftSemi"), p4)
     assert(!p4.contains("CartesianProduct"), p4)
-    // Q21: the EXISTS + NOT EXISTS pair becomes semi + anti joins on
-    // l_orderkey; nothing quadratic survives planning
+    // Q21: the EXISTS + NOT EXISTS pair is ONE pass over lineitem —
+    // per-order supplier counts ride windows partitioned by
+    // l_orderkey instead of semi + anti self-joins; nothing quadratic
+    // survives planning
     val p21 = plan(Registry.byName("Q_TPCH21_waiting_supplier").fn(spark, sf()))
-    assert(p21.contains("LeftSemi"), p21)
-    assert(p21.contains("LeftAnti"), p21)
+    assert(p21.split("\n").count(l =>
+      l.contains("FileScan") && l.contains("lineitem")) === 1, p21)
+    assert(p21.split("\n").exists(l =>
+      l.contains("Window") && l.contains("l_orderkey")), p21)
+    assert(p21.contains("hashpartitioning(l_orderkey"), p21)
     assert(!p21.contains("CartesianProduct") &&
       !p21.contains("BroadcastNestedLoopJoin"), p21)
     // Q16: the NOT IN blacklist is a null-aware anti join, broadcast

@@ -2597,6 +2597,33 @@ class SourceSpec extends GraftSpec {
       policy = "stcs").isEmpty)
   }
 
+  test("compactIfNeeded ends when a tier pass does not lower the file count") {
+    import graft.sources.CellMaintenance
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    val d = Files.createTempDirectory("cells-stcs-flat").toString
+    // four similar files over DISJOINT pk ranges, 200,000 cells in all:
+    // the merge's reconciling read plans ceil(200,000 / 65,536) = 4
+    // range tasks (the default subsplit), each writing one file, so a
+    // tier pass — and a major compaction — go 4 → 4
+    (0 until 4).foreach { k =>
+      CellSource.writeSnapshot(d, (0 until 50000).map(i =>
+        ((k * 50000 + i).toLong, 1, "qty", i.toLong, 1L)), files = 1,
+        startIndex = k)
+    }
+    def reconciled() = spark.read.format("graft.sources.CellSource")
+      .option("reconcile", "true").load(d)
+      .selectExpr("count(*)", "sum(pk)", "sum(value)").head()
+    val before = reconciled()
+    // bounded wait: a loop that mistakes a flat pass for progress
+    // fails here instead of hanging the suite
+    val r = Await.result(Future(CellMaintenance.compactIfNeeded(spark,
+      d, maxFiles = 3, policy = "stcs")), 5.minutes)
+    assert(r.exists(_._1 == 4), r)
+    assert(reconciled() == before)
+  }
+
   test("typed-key reverse reads: ck DESC + tail limit on CEL6 (C39)") {
     val d = Files.createTempDirectory("cells-typed-rev").toString
     typedWrite(
@@ -3002,6 +3029,41 @@ class SourceSpec extends GraftSpec {
       .option("withTtl", "true").load(d)
     assert(raw.select("_expiry").as[Long].collect().toSet ==
       Set(Long.MaxValue, 1009L))
+  }
+
+  test("typed TTL cells still expire after STCS, LCS and TWCS passes") {
+    import graft.sources.CellMaintenance
+    // four similar-size flushes (one STCS tier, four L0 files, one
+    // TWCS window); u-x's cell expires at 1000 + 110
+    def table(): String = {
+      val d = Files.createTempDirectory("cells-ttl11tier").toString
+      (0 until 4).foreach { k =>
+        writeTypedTtl(d, Seq(("u-" + k, 0, "qty", k.toLong, 1000L, None),
+          if (k == 0) ("u-x", 0, "qty", 9L, 1000L, Some(110L))
+          else ("u-" + k, 1, "qty", k.toLong, 1000L, None)))
+      }
+      d
+    }
+    def live(d: String) = spark.read.format("graft.sources.CellSource")
+      .option("reconcile", "true").option("queryTime", "2000").load(d)
+      .select("user").as[String].collect().toSet
+    val passes = Seq[(String, String => Unit)](
+      "stcs" -> (d => assert(CellMaintenance.compactTiered(spark, d)
+        .isDefined)),
+      "lcs" -> (d => assert(CellMaintenance.compactLeveled(spark, d)
+        .isDefined)),
+      "twcs" -> (d => assert(CellMaintenance.compactWindows(spark, d,
+        1000000L).nonEmpty)))
+    passes.foreach { case (name, pass) =>
+      val d = table()
+      val before = live(d)
+      assert(!before.contains("u-x") && before.size == 4, name)
+      pass(d)
+      val files = Files.list(java.nio.file.Paths.get(d)).iterator()
+        .asScala.count(_.getFileName.toString.endsWith(".cells"))
+      assert(files < 4, name)
+      assert(live(d) == before, s"$name pass resurrected an expired cell")
+    }
   }
 
   // ---- C42: anti-entropy repair ----
